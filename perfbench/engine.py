@@ -36,6 +36,7 @@ LLM = [
 ]
 QUERY_SETS = {"batch_relational": RELATIONAL, "batch_llm": LLM}
 TOPIC = "bench"
+MIN_PASSES = 3  # timed batch passes per run, whatever --seconds is
 
 
 def emit(event: str, **fields) -> None:
@@ -103,20 +104,18 @@ def run_batch(spark, args, probe) -> dict:
     rng = random.Random(args.seed)
     spark.read.parquet(os.path.join(args.corpus, "region.parquet")).collect()
     emit("ready")
-    if probe is not None:
-        probe.mark_window()
     ops: list[dict] = []
     outputs: list[tuple] = []
-    passes: list[float] = []
-    t_start = time.perf_counter()
-    while True:
+
+    def run_pass(warmup: bool) -> float:
+        traced = probe is not None and not warmup
         rng.shuffle(names)
         pass_s = 0.0
         for name in names:
-            op = {"name": name, "ok": True}
+            op = {"name": name, "ok": True, "warmup": warmup}
             t0 = time.perf_counter()
             try:
-                if probe is not None:
+                if traced:
                     df, rows = probe.run_query(name, lambda: QUERIES[name](spark, args.corpus))
                 else:
                     df = QUERIES[name](spark, args.corpus)
@@ -127,17 +126,27 @@ def run_batch(spark, args, probe) -> dict:
                 op.update(ok=False, s=time.perf_counter() - t0, error=repr(exc)[:300])
             pass_s += op["s"]
             ops.append(op)
-        passes.append(pass_s)
-        if time.perf_counter() - t_start >= args.seconds:
-            break
+        return pass_s
+
+    # The first pass pays every first-use cost (JIT, Python worker forks,
+    # codegen) and is reported apart; the timed passes that follow run warm.
+    passes: list[float] = []
+    cold_s = run_pass(warmup=True)
+    emit("warm")
+    if probe is not None:
+        probe.mark_window()
+    t_start = time.perf_counter()
+    while len(passes) < MIN_PASSES or time.perf_counter() - t_start < args.seconds:
+        passes.append(run_pass(warmup=False))
     emit("timed_done")
     from check_results import check_batch
 
     for index, problem in check_batch(args.corpus, outputs):
         ops[index].update(ok=False, error=problem)
-    result = {"ops": ops, "passes": passes}
+    result = {"ops": ops, "passes": passes, "cold_pass_s": cold_s}
     if probe is not None:
-        result["layers"], detail = probe.batch_layers(ops, len(passes))
+        timed = [op for op in ops if not op["warmup"]]
+        result["layers"], detail = probe.batch_layers(timed, len(passes))
         result["trace"] = trace_detail(probe, detail)
     return result
 

@@ -62,24 +62,39 @@ TICK = os.sysconf("SC_CLK_TCK")
 
 
 def group_usage(pgid: int) -> tuple[int, int, float]:
-    """(processes, summed RSS bytes, CPU seconds) of process group ``pgid``.
-    CPU counts user + system time, plus that of exited children the group
-    has reaped."""
-    procs, rss, ticks = 0, 0, 0
+    """(processes, summed anonymous RSS bytes, CPU seconds) of process group
+    ``pgid``. CPU counts user + system time, plus that of exited children
+    the group has reaped.
+
+    RSS leaves out file-backed pages (jars, shared libraries): the kernel
+    drops and re-reads those as the host's page cache demands. A child that
+    still shares its parent's address space is counted once: when the JVM
+    starts a process (``posix_spawn`` is a ``vfork``), the child reports the
+    whole JVM's RSS until it calls ``exec``, and a sample taken in that
+    window would count the JVM twice."""
+    procs: dict[int, tuple[int, tuple, int]] = {}  # pid -> (ppid, layout, anon bytes)
+    ticks = 0
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
             continue
         try:
             with open(f"/proc/{entry}/stat") as fh:
                 fields = fh.read().rsplit(")", 1)[1].split()
+            if int(fields[2]) != pgid:
+                continue
+            with open(f"/proc/{entry}/statm") as fh:
+                resident, shared = (int(f) for f in fh.read().split()[1:3])
         except OSError:
             continue  # exited while listing
-        if int(fields[2]) != pgid:
-            continue
-        procs += 1
         ticks += sum(int(f) for f in fields[11:15])
-        rss += int(fields[21]) * PAGE
-    return procs, rss, ticks / TICK
+        # vsize, start_code, end_code, start_stack: equal for a shared mm
+        layout = (fields[20], fields[23], fields[24], fields[25])
+        procs[int(entry)] = (int(fields[1]), layout, (resident - shared) * PAGE)
+    rss = sum(
+        anon for ppid, layout, anon in procs.values()
+        if ppid not in procs or procs[ppid][1] != layout
+    )
+    return len(procs), rss, ticks / TICK
 
 
 class UsageSampler(threading.Thread):
@@ -123,6 +138,9 @@ class Engine:
         env["SPARK_SUBMIT_OPTS"] = f"-Xms{ENGINE_HEAP} -XX:+AlwaysPreTouch"
         # HotSpot writes its perf-data file to /tmp whatever java.io.tmpdir says
         env["JAVA_TOOL_OPTIONS"] = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
+        # local[N] follows os.cpu_count(), which counts the host's CPUs, not
+        # the ones this process may run on
+        env["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
         cmd = [
             sys.executable, os.path.join(HERE, "engine.py"),
             "--workload", args.workload, "--seed", str(args.seed),
@@ -199,6 +217,10 @@ def run_batch(args, size, work) -> dict:
     engine = Engine(args, work, ["--corpus", corpus])
     try:
         engine.wait_event("ready")
+        session_s = time.perf_counter() - engine.started
+        # set-up runs until the first timed operation: it includes the
+        # warm-up pass, so work moved into a query's first run still shows
+        engine.wait_event("warm")
         setup_s = time.perf_counter() - engine.started
         cpu0 = engine.cpu_seconds()
         engine.wait_event("timed_done")
@@ -208,21 +230,29 @@ def run_batch(args, size, work) -> dict:
     finally:
         engine.close()
     ops = result["ops"]
-    times = [op["s"] * 1e3 for op in ops]
+    timed = [op for op in ops if not op["warmup"]]
     failed = [op for op in ops if not op["ok"]]
     for op in failed:
         print(f"failed: {op['name']}: {op.get('error')}", file=sys.stderr)
-    pass_s = statistics.median(result["passes"])
+    # one pass = every query once; each query counts with its median over
+    # the timed passes, so a slow moment in one pass does not move the run
+    per_query: dict[str, list[float]] = {}
+    for op in timed:
+        per_query.setdefault(op["name"], []).append(op["s"])
+    medians = [statistics.median(v) for v in per_query.values()]
+    times = [op["s"] * 1e3 for op in timed]
     return {
         "attempted": len(ops),
         "failed": len(failed),
         "metrics": {
             "setup_s": (setup_s, "s"),
             "peak_rss_mb": (engine.rss.peak_bytes / 2**20, "MB"),
-            "wall_s": (pass_s, "s"),
-            "latency_mean_ms": (statistics.fmean(times), "ms"),
+            "wall_s": (sum(medians), "s"),
+            "latency_mean_ms": (statistics.fmean(medians) * 1e3, "ms"),
         },
         "report": {
+            "session_s": (session_s, "s"),
+            "cold_pass_s": (result["cold_pass_s"], "s"),
             "cpu_s": (cpu_s / len(result["passes"]), "s"),
             "samples": (len(times), "count"),
             "latency_p50_ms": (percentile(times, 0.50), "ms"),

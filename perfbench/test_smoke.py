@@ -31,8 +31,9 @@ def run(workload: str, trace: int, cwd: str = ROOT) -> subprocess.CompletedProce
     )
 
 
-# stream_backfill is runnable but outside BENCHMARK.json's set (NOTES.md)
-WORKLOADS = [w["name"] for w in BENCH["workloads"]] + ["stream_backfill"]
+# batch_relational and stream_backfill are runnable but outside
+# BENCHMARK.json's set (NOTES.md)
+WORKLOADS = [w["name"] for w in BENCH["workloads"]] + ["batch_relational", "stream_backfill"]
 
 
 @pytest.mark.parametrize("trace", [0, 1])

@@ -13,7 +13,7 @@ import json
 import os
 import statistics
 
-from engine import LLM, RELATIONAL
+from engine import LLM
 from quantiles import percentile
 
 UNITS = {
@@ -33,7 +33,7 @@ UNITS = {
     "executor.spill_bytes": "bytes",
     "executor.tasks": "count",
     "collect.residual_s": "s",
-    **{f"query.{name}_s": "s" for name in RELATIONAL + LLM},
+    **{f"query.{name}_s": "s" for name in LLM},
     "streaming.trigger_ms": "ms",
     "streaming.addBatch_ms": "ms",
     "streaming.queryPlanning_ms": "ms",
