@@ -342,6 +342,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
     gated_width = cpus == BUDGET_CPUS
 
+    from roar_spark.caching import scope
     from roar_spark.registry import QUERIES
     from roar_spark.session import get_spark
 
@@ -378,7 +379,8 @@ def main() -> None:
         attempt = 0
         while True:
             t0 = time.perf_counter()
-            rows = fn(spark, sf_dir).collect()
+            with scope():
+                rows = fn(spark, sf_dir).collect()
             dt = time.perf_counter() - t0
             if attempt == 0:
                 cold_total += dt
@@ -426,7 +428,8 @@ def main() -> None:
             drift_final = max(drift, probe_drift_ratio(recheck_probes))
             for name in flagged_queries(times, BUDGETS_SF01, drift_final):
                 t0 = time.perf_counter()
-                rows = QUERIES[name](spark, sf_dir).collect()
+                with scope():
+                    rows = QUERIES[name](spark, sf_dir).collect()
                 dt = time.perf_counter() - t0
                 _ = len(rows)
                 recheck_reruns[name] = [times[name], round(dt, 3)]

@@ -1,82 +1,79 @@
-"""Scoped persist-cache: ONE bounded set of persisted tables per operator
-family, released on the family's next invocation.
+"""Materialized operator intermediates: one helper, one owner.
 
-The contract every site shares (text_tfidf's original comment): the
-returned plans are lazy, so an operator cannot unpersist its own cache
-before the caller consumes it — draining the PREVIOUS invocation's cache
-on entry bounds the leak to one table set per family across sweep-length
-sessions. Factored out in r8: the three persisted-DataFrame copies
-(dedup, text, similarity) had drifted in lock scope — a concurrency-
-sensitive pattern belongs in one place. serve_compose keeps its own
-tag-keyed TEMPDIR variant (rmtree, not unpersist; a dict, not a list) —
-structurally different enough that sharing would obscure both.
+An operator whose intermediate feeds more than one branch of its plan
+materializes it with ``materialize(df)``: an eager ``localCheckpoint``.
+The checkpoint is computed once, race-free (no lazily-filled cache for
+concurrently submitted branch scans to populate twice), and every branch
+plans over its ``LogicalRDD`` leaf. Each call makes a fresh RDD that
+belongs to the plans reading it, so two invocations never share an entry
+and nothing global has to decide when to free one.
+
+Who frees the blocks:
+
+- A caller that opens ``with scope():`` owns every intermediate
+  materialized inside it (on this thread or task — the scope is a
+  ``ContextVar``), and leaving the scope releases their blocks at once.
+- Without a scope, Spark's ContextCleaner frees a checkpoint once no
+  plan references it.
+
+The one rule: a result, and any frame derived from it, must not be used
+after its scope is left.
+
+Executor loss: a local checkpoint cannot be recomputed, so losing the
+executor holding its blocks fails the query; the recovery path is
+re-running it (SCALE.md, "r12: localCheckpoint executor-loss
+adjudication"). A deployment that cannot retry swaps
+``localCheckpoint(eager=True)`` for ``checkpoint(eager=True)`` in
+``materialize`` after setting a checkpoint dir.
 """
 
 from __future__ import annotations
 
-import threading
+import contextlib
+import contextvars
+
+from pyspark.sql import DataFrame
+
+_SCOPE: contextvars.ContextVar[list | None] = contextvars.ContextVar(
+    "roar_spark_scope", default=None
+)
 
 
-def drain_scoped(cache: list, lock: threading.Lock) -> None:
-    """Release the previous invocation's set NOW — call this at OPERATOR
-    ENTRY, before this invocation persists its own tables.
-
-    Why the drain cannot wait for the register-at-end call (r12, found
-    live): back-to-back invocations of one operator build canonically
-    IDENTICAL plans, so the second invocation's ``persist()`` does not
-    create a cache entry — the CacheManager logs "Asked to cache already
-    cached data" and adopts the FIRST invocation's live entry. A
-    register-at-end drain then unpersists the previous handle, which IS
-    that shared entry, and every downstream action of the current
-    invocation runs fully uncached — each consumer branch re-executes
-    the whole supposedly-cached pipeline. Measured on
-    dedup_ngram_jaccard at sf0.1: rep0 3.3 s, reps 1+ 13-20 s (the
-    candidate subtree re-ran inside the broadcast build, the set sides
-    re-tokenized the corpus twice); bench.py's per-rep rebuild hits
-    exactly this pattern, so gated best-of-N times silently measured the
-    uncached path. Draining FIRST frees the old entry before the new
-    ``persist()``, which then creates a fresh one that lives until the
-    family's next invocation."""
-    register_scoped(cache, lock, [])
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly checkpoint ``df`` and record it in the open scope, if any."""
+    cp = df.localCheckpoint(eager=True)
+    held = _SCOPE.get()
+    if held is not None:
+        # a fresh frame over the same logical plan: holding ``df`` itself
+        # would keep its executed plan, and with it the checkpoint job's
+        # shuffle files, alive until the scope ends
+        held.append((df.select("*"), cp))
+    return cp
 
 
-def register_scoped(cache: list, lock: threading.Lock, items: list) -> None:
-    """Swap the family's cache to ``items`` and release the previous set.
-
-    The swap happens under the family's lock (a concurrent drain+register
-    must not release a set another thread just registered); the release
-    itself runs OUTSIDE it — unpersist is a JVM round-trip and nothing it
-    touches is guarded by the lock. ``items`` may be persisted DataFrames
-    or anything else with the release hook (``unpersist`` or ``cleanup``,
-    e.g. serve_compose's tempdir handles).
-    """
-    with lock:
-        prev = cache[:]
-        cache.clear()
-        cache.extend(items)
-    for item in prev:
-        release = getattr(item, "unpersist", None) or getattr(item, "cleanup", None)
-        if release is not None:
-            release()
+def release(df: DataFrame) -> None:
+    """Free a materialized frame's blocks now. ``Dataset.unpersist`` does
+    not reach checkpoint blocks, so this goes through the plan's
+    ``LogicalRDD`` leaf. Best-effort: a failure (plan-shape drift across
+    Spark versions) leaves the blocks to the ContextCleaner, never
+    raises."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:  # noqa: BLE001 — degrade to ContextCleaner GC
+        pass
 
 
-class checkpoint_handle:
-    """register_scoped-compatible cleanup handle for a localCheckpointed
-    DataFrame (r12, ADVICE r11): ``Dataset.unpersist`` does not touch
-    checkpoint blocks — they are freed only when the RDD is GC'd through
-    the ContextCleaner, so long-lived sessions invoking a checkpointing
-    operator repeatedly accumulate executor block-store usage
-    nondeterministically. The handle reaches the checkpointed RDD through
-    the plan's LogicalRDD leaf and unpersists its blocks explicitly when
-    the family's next invocation swaps the cache. Best-effort by design:
-    a failure (plan-shape drift across Spark versions) degrades to the
-    old GC behavior, never to an error."""
-
-    def __init__(self, df) -> None:
-        self._df = df
-
-    def cleanup(self) -> None:
-        try:
-            self._df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:  # noqa: BLE001 — degrade to ContextCleaner GC
-            pass
+@contextlib.contextmanager
+def scope():
+    """Own the intermediates materialized inside the block; release them
+    on exit. Yields the held ``(source, checkpoint)`` pairs: the source
+    frame keeps the subtree a checkpoint hides from ``explain`` (it prints
+    as ``Scan ExistingRDD``), so plan checks can still inspect it."""
+    held: list = []
+    token = _SCOPE.set(held)
+    try:
+        yield held
+    finally:
+        _SCOPE.reset(token)
+        for _src, cp in held:
+            release(cp)

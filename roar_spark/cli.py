@@ -362,6 +362,7 @@ def cmd_materialize(args: argparse.Namespace) -> int:
     manifest — the batch materialization step of a curation pipeline
     (operators/writer.py). The in-memory result never routes through the
     driver; only the O(n_shards) manifest counts do."""
+    from roar_spark.caching import scope
     from roar_spark.catalog import register_views
     from roar_spark.operators.writer import write_sharded_dataset
     from roar_spark.session import get_spark
@@ -391,7 +392,7 @@ def cmd_materialize(args: argparse.Namespace) -> int:
     # routing and the query — two per-branch defaults desynchronizing is
     # the exact bug test_cli_bucketed_routes_same_dir_as_views pins
     directory = _corpus_dir(args) if args.query_name else (args.dir or None)
-    with _bucketed_mode(spark, args, directory):
+    with _bucketed_mode(spark, args, directory), scope():
         if args.query_name:
             df = QUERIES[args.query_name](spark, directory)
         else:

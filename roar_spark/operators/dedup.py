@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from roar_spark.caching import materialize
 from roar_spark.catalog import load_table, table_row_count
 from roar_spark.functions.text_fns import (
     SHINGLE_FANOUT,
@@ -61,39 +62,6 @@ SIMHASH_BITS = 60  # 15 md5 hex digits; 60 < 63 keeps 1<<b clear of the
 # non-planted pairs legitimately fall under any threshold — the oracle
 # matches exactly either way. hamming ≤ 4 of 60 ≈ cosine ≥ 0.96.
 SIMHASH_HAMMING = 4
-
-
-import threading
-
-# One live set of persisted dedup intermediates per session (the
-# _TF_CACHE/_WB_CACHE pattern, same rationale): a dedup operator's
-# returned plan is lazy, so it cannot unpersist its own shingle/signature
-# caches before the caller consumes them — but sweep/bench sessions run
-# dozens of dedup queries back-to-back, and unreleased caches (a 232M-row
-# shingle table at 4M docs) pile into storage-memory pressure for every
-# later query. Registering an invocation's tables releases the PREVIOUS
-# invocation's; the bound is ONE cached set per session.
-_DEDUP_CACHE: list[DataFrame] = []
-_DEDUP_CACHE_LOCK = threading.Lock()
-
-
-def _register_scoped(dfs: list[DataFrame]) -> None:
-    """Own this invocation's persisted tables; unpersist the previous
-    invocation's (shared contract: roar_spark.caching)."""
-    from roar_spark.caching import register_scoped
-
-    register_scoped(_DEDUP_CACHE, _DEDUP_CACHE_LOCK, dfs)
-
-
-def _drain_scoped() -> None:
-    """Release the previous dedup invocation's tables at OPERATOR ENTRY —
-    before this invocation's persist() calls, which on a repeated
-    identical plan would otherwise adopt (and then lose, when
-    _register_scoped drains) the previous invocation's live cache entry.
-    See roar_spark.caching.drain_scoped for the measured failure."""
-    from roar_spark.caching import drain_scoped
-
-    drain_scoped(_DEDUP_CACHE, _DEDUP_CACHE_LOCK)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,8 +312,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the global shingle-frequency window and the prefix groupBy), and it
     carries n = size(sset) from the projection, so the per-doc count
     window _prefix_candidates used to run is gone; verification reads
-    the cached arrays directly (no collect_list re-aggregation). The
-    cache itself shrinks from ~57 rows/doc to 1. Interleaved A/B at
+    the materialized arrays directly (no collect_list re-aggregation). The
+    intermediate shrinks from ~57 rows/doc to 1. Interleaved A/B at
     sf0.1, 3 clean rep pairs: old 6.12/6.21 s vs new 3.08/3.31 s
     (best/median, ~2×), outputs identical."""
     n_docs = table_row_count("documents", sf_dir)
@@ -353,9 +321,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy over the full ~SHINGLE_FANOUT-rows/doc explode — width
     # travels with this plan via the (possibly cloned) session
     spark = tuned_session(spark, n_docs * SHINGLE_FANOUT)
-    _drain_scoped()  # BEFORE this invocation's persists (caching.drain_scoped)
     docs = load_table(spark, "documents", sf_dir, spread=True)
-    docsets = (
+    # Materialized BEFORE the plan branches: docsets feeds the
+    # frequency/prefix pipeline AND both verification sides. A lazily
+    # filled cache is raced by the branches of one action — each can miss
+    # and recompute the whole tokenize+shingle build (the racing
+    # recompute costs multiples of the full query).
+    docsets = materialize(
         docs.select("doc_id", tokens(F.col("text")).alias("t"))
         # filter BEFORE shingling: F.sequence(0, size-3) runs backwards
         # for size < 3 and would fabricate wrap-around shingles
@@ -364,25 +336,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.sort_array(F.array_distinct(word_shingles(F.col("t")))).alias("sset"),
         )
-        .persist()
     )
-    # Materialize the cache BEFORE the plan branches: docsets feeds the
-    # frequency/prefix pipeline AND both verification sides. A lazy
-    # persist populates per-partition on first touch, and the branches of
-    # one action race — each can miss and recompute the whole
-    # tokenize+shingle build (measured: the no-op count is ~0.3 s; the
-    # racing recompute costs multiples of the full query).
-    docsets.count()
     sh = docsets.select(
         "doc_id", F.size("sset").alias("n"), F.explode("sset").alias("shingle")
     )
     # Materialized too: without stats Catalyst guesses the candidate side
     # small and broadcasts it — which executes the whole
     # freq-join+window+bucket-pair subtree ON THE DRIVER (measured ~20 s);
-    # cached, the broadcast is a cheap cache read and AQE sees real sizes.
-    cand = _prefix_candidates(sh, JACCARD_THRESHOLD).persist()
-    cand.count()
-    _register_scoped([docsets, cand])
+    # materialized, the broadcast is a cheap read and AQE sees real sizes.
+    cand = materialize(_prefix_candidates(sh, JACCARD_THRESHOLD))
     sets = docsets.select("doc_id", "sset", F.size("sset").alias("n_shingles"))
     # candidate-id prune, same gate as dedup_minhash_lsh — free here
     # (cand is ALWAYS materialized for the stats reason above, so the
@@ -434,35 +396,30 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   deterministic hash key (round-robin pays sort-before-repartition
     #   and is retry-unsafe, guide §2.5). On a real multi-file corpus the
     #   condition is False and full text never shuffles.
-    # - localCheckpoint (not persist): materializes the branch-shared
-    #   table race-free and cuts the lineage so the banding pipeline and
-    #   both verification sides plan over a LogicalRDD leaf (the persist
-    #   variant measured slower in the r12 row-table A/B: columnar cache
-    #   build + full-lineage replanning cost more than they return —
-    #   RE-VERIFIED after the drain-at-entry cache fix, which had made
-    #   every repeat-invocation persist comparison suspect: interleaved
-    #   array-form A/B, checkpoint best 1.37 s vs persist 1.86 s).
-    #   Executor-loss caveat and cleanup: registered below via
-    #   checkpoint_handle (ADVICE r11); trade adjudicated in SCALE.md.
-    from roar_spark.caching import checkpoint_handle
+    # - materialize (a checkpoint, not persist): the branch-shared table
+    #   is built race-free and the banding pipeline and both verification
+    #   sides plan over a LogicalRDD leaf (the persist variant measured
+    #   slower in the r12 A/B: columnar cache build + full-lineage
+    #   replanning cost more than they return — interleaved array-form
+    #   A/B, checkpoint best 1.37 s vs persist 1.86 s). Executor-loss
+    #   caveat and cleanup: roar_spark.caching; trade adjudicated in
+    #   SCALE.md.
     from roar_spark.catalog import scan_underparallel
     from roar_spark.session import shuffle_width_for
 
     width = shuffle_width_for(
         int(spark.conf.get("spark.sql.shuffle.partitions")), n_docs * SHINGLE_FANOUT
     )
-    _drain_scoped()  # BEFORE this invocation's persists (caching.drain_scoped)
     docs = load_table(spark, "documents", sf_dir)
     if scan_underparallel("documents", sf_dir, spark.sparkContext.defaultParallelism):
         docs = docs.repartition(width, "doc_id")
-    docsets = (
+    docsets = materialize(
         docs.select("doc_id", tokens(F.col("text")).alias("t"))
         .filter(F.size("t") >= 3)
         .select(
             "doc_id",
             F.sort_array(F.array_distinct(word_shingles(F.col("t")))).alias("sset"),
         )
-        .localCheckpoint(eager=True)
     )
     sig_cols = []
     for j in range(N_MINHASH):
@@ -500,7 +457,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = _bucket_pairs(bands, "band", *key_fields)
     # Candidate-id pruning of the verification stage (r12, verdict r11
     # item 1 — guide §2.2/§3), SIZE-GATED: above the cutoff, cand is
-    # materialized (persist+count — the prune consumes it twice: id
+    # materialized (the prune consumes it twice: id
     # derivation + the pair join; unmaterialized, each consumer would
     # re-execute the whole banding pipeline) and the set table is
     # semi-joined to the candidate doc ids BEFORE the pair join, so
@@ -516,12 +473,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune = n_docs > MINHASH_PRUNE_MIN_DOCS
     sets = docsets.select("doc_id", "sset", F.size("sset").alias("n_shingles"))
     if prune:
-        cand = cand.persist()
-        cand.count()
-        _register_scoped([checkpoint_handle(docsets), cand])
+        cand = materialize(cand)
         sets = _prune_sets_to_candidates(cand, sets)
-    else:
-        _register_scoped([checkpoint_handle(docsets)])
     return (
         _verify_pairs_sets(cand, sets)
         .filter(F.col("jaccard") >= 0.5)
@@ -753,20 +706,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str, force_pigeonhole: bool | Non
     # cache canonicalization and AQE's per-stage re-optimization copy it
     # with TreeNode.makeCopy (driver thread-dumped at ~9.7 s of CPU in
     # one bench invocation; execution itself was 0.13 s).
-    # localCheckpoint cuts the pair stage's plan to a LogicalRDD leaf:
+    # The checkpoint cuts the pair stage's plan to a LogicalRDD leaf:
     # the giant expression is planned exactly once, in sig's own job.
-    # Registered for explicit block cleanup on the family's next
-    # invocation (r12, ADVICE r11 — checkpoint blocks are otherwise freed
-    # only by GC); cluster-scale caveat: a localCheckpointed lineage is
-    # NOT recomputable after executor loss — the signature table is
-    # n_docs × 16 B (tiny next to its shingle inputs), so the adjudicated
-    # trade is re-running the query on a lost-executor failure rather
-    # than paying reliable-checkpoint I/O per invocation (SCALE.md r12).
-    from roar_spark.caching import checkpoint_handle
-
-    _drain_scoped()  # release the previous invocation's blocks up front
-    sig = simhash_signatures(spark, sf_dir).localCheckpoint(eager=True)
-    _register_scoped([checkpoint_handle(sig)])
+    # Cleanup and the executor-loss caveat: roar_spark.caching (the
+    # signature table is n_docs × 16 B, tiny next to its shingle inputs).
+    sig = materialize(simhash_signatures(spark, sf_dir))
     if use_pigeonhole:
         # third tier: composite (multi-index) keys only where the
         # single-chunk candidate volume n²/2¹² dominates the 3× key cost —
@@ -1023,13 +967,11 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash join on the shingle key (or a bloom-filter pre-pass). Output is
     per-contaminated-doc evidence counts, not just a flag."""
     # spread: the tokenize+shingle build is the heaviest map work here and
-    # both sides derive from it; persist so the eval-broadcast job's pass
-    # over the corpus is reused by the training-side stream instead of
-    # re-tokenizing the full corpus (SCALE.md 1M sweep).
+    # both sides derive from it; materialized so the eval-broadcast job's
+    # pass over the corpus is reused by the training-side stream instead
+    # of re-tokenizing the full corpus (SCALE.md 1M sweep).
     spark = tuned_session(spark, table_row_count("documents", sf_dir) * SHINGLE_FANOUT)
-    _drain_scoped()  # BEFORE this invocation's persists (caching.drain_scoped)
-    sh = _doc_shingles(spark, sf_dir, spread=True).persist()
-    _register_scoped([sh])
+    sh = materialize(_doc_shingles(spark, sf_dir, spread=True))
     train = sh.filter(F.col("doc_id") % EVAL_MOD != 0)
     eval_sh = F.broadcast(
         sh.filter(F.col("doc_id") % EVAL_MOD == 0)

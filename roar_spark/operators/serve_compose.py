@@ -35,9 +35,9 @@ from roar_spark.streaming.manager import StreamEngine
 
 _TOPIC = "orders_feed"
 
-# One live serving tempdir per operator (the _TF_CACHE pattern): the
-# snapshot returned to the caller lazily scans the store, so the CURRENT
-# invocation's dir must outlive the call — but the PREVIOUS one can go.
+# One live serving tempdir per operator: the snapshot returned to the
+# caller lazily scans the store, so the CURRENT invocation's dir must
+# outlive the call — but the PREVIOUS one can go.
 # Without this, sweep-length sessions accumulate a corpus-sized tempdir
 # per invocation. Also the place the buffer cap is set: the serve-compose
 # contract is "the store loses/alters NOTHING", so the default 100 MiB
@@ -51,7 +51,7 @@ def _fresh_store_base(tag: str) -> str:
     import shutil
     import tempfile
 
-    # Locked like the sibling _TF_CACHE/_WB_CACHE caches: a concurrent
+    # Locked because callers may run concurrently: a concurrent
     # pop+rmtree must not delete a live store dir mid-read or leak the
     # tempdir created between the pop and the store.
     with _SERVE_DIRS_LOCK:

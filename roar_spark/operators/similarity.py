@@ -23,34 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from roar_spark.caching import materialize, release
 from roar_spark.catalog import load_table
 from roar_spark.functions.vector import cosine, norm
 
 N_QUERIES = 10
 TOP_K = 5
-
-# Bounded cache for the persisted bucket-id tables: the returned plans are
-# lazy, so an operator cannot unpersist its own cache before the caller
-# consumes it — releasing the PREVIOUS invocation's cache on entry bounds
-# the leak to one table per call site across sweep-length sessions (same
-# contract as text.py's _TF_CACHE).
-import threading
-
-_WB_CACHE: list = []
-_WB_CACHE_LOCK = threading.Lock()
-
-
-def _persist_bounded(df: "DataFrame") -> "DataFrame":
-    from roar_spark.caching import drain_scoped, register_scoped
-
-    # drain the previous invocation's entry BEFORE persisting: a repeated
-    # identical plan would otherwise adopt the live entry and the
-    # register below would unpersist it out from under this invocation
-    # (caching.drain_scoped documents the measured failure)
-    drain_scoped(_WB_CACHE, _WB_CACHE_LOCK)
-    register_scoped(_WB_CACHE, _WB_CACHE_LOCK, [df.persist()])
-    return df
-
 
 # Row floor for the embeddings consumers' spread opt-in (catalog.load_table):
 # their per-row first-stage work is one hash/fold — light enough that the
@@ -1016,7 +994,7 @@ def _lsh_candidate_pairs(
     (exactly, or at Hamming distance 1) in ANY of the hash tables.
 
     Buckets are computed once (single matmul — see _bucket_ids) and
-    persisted; the probe side fans each vector to its 1+planes Hamming-1
+    materialized; the probe side fans each vector to its 1+planes Hamming-1
     buckets, the plain side keeps the true bucket, and the equi-join on
     (tbl, bkt) yields every pair within Hamming ≤ 1 of each other in some
     table. Only (vec_id, tbl, bkt) key tuples shuffle — embeddings never
@@ -1028,8 +1006,7 @@ def _lsh_candidate_pairs(
     pin, SCALE.md table). The production dedup path enumerates the same
     pair space inside bucket groups with a matmul screen instead
     (_lsh_screened_pairs) so per-pair cost is BLAS, not a fold."""
-    wb = _persist_bounded(_bucket_ids(emb, n_planes, dim, n_tables))
-    wb.count()  # eager: see _lsh_screened_pairs (concurrent-scan cache race)
+    wb = materialize(_bucket_ids(emb, n_planes, dim, n_tables))
     # "higher": the pair space is symmetric (corpus vs corpus), so upward-
     # only Hamming-1 probing covers every unordered bucket pair once
     # instead of twice — identical candidate set after the distinct
@@ -1089,16 +1066,15 @@ def _lsh_screened_pairs(
     import pandas as pd
 
     if _wb is None:
-        wb = _persist_bounded(_bucket_ids(emb, n_planes, dim, n_tables, emit_qemb=True))
         # EAGER materialization: wb fans out to two SMJ map stages
         # (entries explode + qemb payload) that AQE can submit
-        # CONCURRENTLY, and a lazy persist is populated independently by
-        # each racing scan — the hash matmul ran twice at once, doubling
-        # Python-worker load and cache allocation (measured: the
+        # CONCURRENTLY, and a lazily filled cache is populated by each
+        # racing scan independently — the hash matmul ran twice at once,
+        # doubling Python-worker load and cache allocation (measured: the
         # hash/persist region ballooned 90 s → ~900 s with 3034 core-s of
-        # JVM GC at 4M; r10 event-log attribution). One count() populates
-        # the cache before the fan-out; every downstream scan then reads it.
-        wb.count()
+        # JVM GC at 4M; r10 event-log attribution). The eager checkpoint
+        # runs once before the fan-out; every downstream scan reads it.
+        wb = materialize(_bucket_ids(emb, n_planes, dim, n_tables, emit_qemb=True))
     else:
         wb = _wb  # staged caller shares ONE materialized bucket table
     import math
@@ -1290,11 +1266,8 @@ def _lsh_screened_pairs_staged(
     never the pair space."""
     from functools import reduce
 
-    from roar_spark.caching import checkpoint_handle, register_scoped
-
     spark = emb.sparkSession
-    wb = _persist_bounded(_bucket_ids(emb, n_planes, dim, n_tables, emit_qemb=True))
-    wb.count()  # eager: see _lsh_screened_pairs (concurrent-scan cache race)
+    wb = materialize(_bucket_ids(emb, n_planes, dim, n_tables, emit_qemb=True))
     parts = []
     for t in range(n_tables):
         stage = _lsh_screened_pairs(
@@ -1309,14 +1282,10 @@ def _lsh_screened_pairs_staged(
         )
         # eager: runs THIS table's job now; truncates lineage so the
         # stage's shuffles become reclaimable before the next stage
-        parts.append(stage.localCheckpoint(eager=True))
+        parts.append(materialize(stage))
         _release_stage_shuffles(spark)
-    # Every stage has run: wb is spent — swap the family cache to the
-    # stages' cleanup handles (r12, ADVICE r11). This releases wb NOW
-    # instead of at the next operator, and frees the checkpointed stage
-    # blocks explicitly when the next similarity invocation swaps them
-    # out (they were previously freed only by GC).
-    register_scoped(_WB_CACHE, _WB_CACHE_LOCK, [checkpoint_handle(p) for p in parts])
+    # every stage has run: wb is spent — free it now, not at scope exit
+    release(wb)
     return reduce(DataFrame.unionAll, parts).distinct()
 
 
@@ -1645,9 +1614,9 @@ def _knn_screened_candidates(
     import numpy as np
     import pandas as pd
 
-    # The bucket table is persisted+eagerly-counted ONLY when the plan
-    # consumes it more than once (probe=True: corpus + probed entry
-    # branches; quantize=True: entries + the qemb payload join) — the
+    # The bucket table is materialized ONLY when the plan consumes it
+    # more than once (probe=True: corpus + probed entry branches;
+    # quantize=True: entries + the qemb payload join) — the
     # concurrent-scan cache race _lsh_screened_pairs documents. On the
     # default bulk path (probe=False, quantize=False) wb has exactly ONE
     # consumer — the entry explode — so the r11 persist+count was a pure
@@ -1657,8 +1626,7 @@ def _knn_screened_candidates(
     # sf0.1; at scale it removes an n-row cache nobody rereads.
     wb = _bucket_ids(emb, n_planes, dim, n_tables, emit_qemb="int16" if quantize else False)
     if probe or quantize:
-        wb = _persist_bounded(wb)
-        wb.count()  # eager: see _lsh_screened_pairs (concurrent-scan cache race)
+        wb = materialize(wb)
     base = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables)
     if probe:
         tagged = base.select("vec_id", "tbl", "bkt", F.lit(0).alias("side")).unionAll(

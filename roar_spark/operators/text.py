@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from roar_spark.caching import materialize
 from roar_spark.catalog import load_table, table_row_count
 from roar_spark.functions.text_fns import SHINGLE_FANOUT, tokens
 from roar_spark.session import tuned_session
@@ -166,14 +167,6 @@ def text_hashing_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hashed_tf(spark, sf_dir).orderBy("doc_id", "bucket")
 
 
-import threading
-
-_TF_CACHE: list[DataFrame] = []
-_TF_CACHE_LOCK = threading.Lock()
-_GOPHER_CACHE: list = []  # gopher's tokenized projection (same contract)
-_GOPHER_CACHE_LOCK = threading.Lock()
-
-
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF weighting over the hashed feature space — the classic
     retrieval/quality-featurization step, vocabulary-free so it runs at
@@ -195,24 +188,13 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rationale as text_hashing_features; tuned BEFORE any table builds so
     # every branch (tf, df_tab, n_docs) lives on the one tuned session
     spark = tuned_session(spark, table_row_count("documents", sf_dir) * SHINGLE_FANOUT)
-    # release the previous invocation's cache first (shared contract:
-    # roar_spark.caching — bounding the leak to ONE cached TF table per
-    # session; sweeps call this dozens of times)
-    from roar_spark.caching import drain_scoped, register_scoped
-
-    # drain BEFORE persisting (caching.drain_scoped): a repeated identical
-    # TF plan adopts the previous invocation's live entry, and a
-    # register-after drain would unpersist it mid-query
-    drain_scoped(_TF_CACHE, _TF_CACHE_LOCK)
-    tf = _hashed_tf(spark, sf_dir).persist()
-    register_scoped(_TF_CACHE, _TF_CACHE_LOCK, [tf])
     # Materialize before the plan branches (the dedup-family lesson):
     # tf feeds BOTH the broadcast df side and the probe side, and Spark
     # plans the tokenize+explode+agg subtree once PER BRANCH (no static
     # exchange reuse across a broadcast boundary — verified in the
-    # formatted plan). The cached table is the bounded sparse TF matrix
-    # (≤ docs × 64 rows), far smaller than re-tokenizing the corpus.
-    tf.count()
+    # formatted plan). The materialized table is the bounded sparse TF
+    # matrix (≤ docs × 64 rows), far smaller than re-tokenizing the corpus.
+    tf = materialize(_hashed_tf(spark, sf_dir))
     # footer read, not a scan: an agg(count) branch here re-ran a Spark
     # scan job over the documents table on EVERY action against the
     # returned plan (inside the broadcast build) — table_row_count is the
@@ -392,7 +374,7 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag here so the flag's semantics stay exactly the repetition rules
     the constants name).
 
-    Shape: the corpus is TOKENIZED ONCE into a scoped-cached (doc_id,
+    Shape: the corpus is TOKENIZED ONCE into a materialized (doc_id,
     tokens) projection; the per-doc stats and both n-gram aggregations
     (each keyed by (doc_id, gram) then re-aggregated by doc_id — partial
     aggregation collapses repeats map-side) all derive from it and join
@@ -412,16 +394,9 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repeats are rare, so partial agg collapses little) — tune width from
     # the explode fan-out like the dedup shingle family (ADVICE r5)
     spark = tuned_session(spark, table_row_count("documents", sf_dir) * SHINGLE_FANOUT)
-    from roar_spark.caching import register_scoped
-
-    from roar_spark.caching import drain_scoped
-
-    # drain BEFORE persisting (caching.drain_scoped, same as the TF cache)
-    drain_scoped(_GOPHER_CACHE, _GOPHER_CACHE_LOCK)
     docs = load_table(spark, "documents", sf_dir, spread=True)
-    tok_df = docs.select("doc_id", tokens(F.col("text")).alias("toks")).persist()
-    register_scoped(_GOPHER_CACHE, _GOPHER_CACHE_LOCK, [tok_df])
-    tok_df.count()  # materialize BEFORE the plan branches (the TF lesson)
+    # materialized BEFORE the plan branches (the TF lesson)
+    tok_df = materialize(docs.select("doc_id", tokens(F.col("text")).alias("toks")))
     toks = F.col("toks")
     base = tok_df.select(
         "doc_id",

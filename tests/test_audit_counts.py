@@ -3,7 +3,7 @@
 The r11 audit counted joins with a bare 'SortMergeJoin (' pattern, but
 formatted-plan join tree-lines interleave the join type between name and
 id ("SortMergeJoin LeftOuter (53)") — the pattern could never match and
-the smj/bnlj columns read 0 unconditionally. The r12 fix counts the
+the smj/bnlj columns read 0 unconditionally. Every counter now reads the
 numbered detail headers ("(53) SortMergeJoin"), which are one per node
 and type-free. These tests lock the counting against a real committed
 plan file (so the fixture cannot drift from what explain actually emits)
@@ -57,6 +57,26 @@ def test_detail_header_only_counted_once_per_node():
 
 
 def test_mid_line_mention_not_counted():
-    # a comment-like mention inside an argument line must not count
-    p = "Arguments: something SortMergeJoin (12) said\n"
-    assert plan_counts(p)["smj"] == 0
+    # a mention inside an argument line or a tree line must not count, and
+    # a header counts only under its exact node name
+    p = (
+        "Arguments: something SortMergeJoin (12) said\n"
+        "Arguments: +- Exchange hashpartitioning, :- Exchange SinglePartition\n"
+        "Arguments: BroadcastExchange (3), Window (4), MapInPandas (5)\n"
+        "Arguments: FlatMapGroupsInPandas (6), BatchEvalPython (7)\n"
+        "Arguments: ArrowEvalPython (8)\n"
+        "+- BroadcastExchange (13)\n"
+        "   +- Window (14)\n"
+        "(9) WindowGroupLimit\n"
+        "(10) ReusedExchange [Reuses operator id: 3]\n"
+    )
+    c = plan_counts(p)
+    for k in ("smj", "exch", "bcast", "rowudf", "arrow_kernels", "wind"):
+        assert c[k] == 0, k
+
+
+def test_codegen_tagged_header_counted():
+    p = "(4) Window [codegen id : 2]\n(7) Exchange\n(8) Scan parquet \n"
+    c = plan_counts(p)
+    assert c["wind"] == 1
+    assert c["exch"] == 1

@@ -139,15 +139,22 @@ def test_lsh_path_plan_shape(spark):
     # Python call per Arrow batch, not per bucket group — r10 event-log
     # fix) plus the hash matmul; no per-group FlatMapGroupsInPandas, no
     # row-at-a-time Python, no cartesian/nested-loop join anywhere
-    df = dedup_embedding_lsh(spark, "/root/testdata/sf0.001", force_lsh=True)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    # exactly one stream-screen MapInPandas; the hash matmul MapInPandas
-    # appears under the persisted bucket table's InMemoryTableScan (the
-    # cached plan is PRINTED per consumer but computed once)
+    from roar_spark.caching import scope
+
+    with scope() as held:
+        df = dedup_embedding_lsh(spark, "/root/testdata/sf0.001", force_lsh=True)
+        p = df._jdf.queryExecution().executedPlan().toString()
+        # the hash matmul runs in the materialized bucket table's own job,
+        # so the returned plan reads it as a Scan ExistingRDD leaf; its
+        # source plan is held by the scope and checked separately
+        sources = [s._jdf.queryExecution().executedPlan().toString() for s, _ in held]
+    # exactly one stream-screen MapInPandas
     assert p.count("MapInPandas screen_stream") == 1
     assert "FlatMapGroupsInPandas" not in p
     assert "BatchEvalPython" not in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
+    assert any("MapInPandas" in s for s in sources)  # the _bucket_ids matmul
+    assert all("BatchEvalPython" not in s for s in sources)
     # the probed A/B baseline keeps the grouped form
     df = dedup_embedding_lsh(
         spark, "/root/testdata/sf0.001", force_lsh=True, force_probing=True

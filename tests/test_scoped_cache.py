@@ -1,55 +1,105 @@
-"""The scoped persist-cache must survive REPEATED invocations of one
-operator (r12, found live): back-to-back invocations build canonically
-identical plans, so the second invocation's persist() adopts the first's
-live CacheManager entry — and the old register-at-end drain then
-unpersisted that shared entry, leaving every downstream action of the
-second invocation fully uncached (dedup_ngram_jaccard reps 1+ measured
-13-20 s vs 3.3 s cached; bench.py's per-rep rebuild hits exactly this
-pattern). The fix is drain-at-entry (caching.drain_scoped); these tests
-pin both the unit-level swap semantics and the live end-to-end cache use
-on a second invocation."""
+"""Materialized intermediates (roar_spark.caching) stay valid however a
+caller interleaves building and collecting, and whichever thread runs
+them.
+
+Every branch-shared operator intermediate is an eager checkpoint: a fresh
+RDD per invocation, owned by the plans that read it. Nothing global is
+drained when the next query is built, so building ``a``, building ``b``
+and only then collecting ``a`` must return ``a``'s rows. A caller that
+opens ``caching.scope()`` frees the scope's blocks on exit; without one,
+Spark's ContextCleaner frees them once no plan reads them.
+"""
 
 from __future__ import annotations
 
-import threading
+from collections import Counter
+from concurrent.futures import ThreadPoolExecutor
+
+import pytest
+
+from roar_spark import caching
+from roar_spark.registry import QUERIES
+
+SF = "/root/testdata/sf0.001"
+
+# build first, build second, then collect first: the first three orders
+# pair checkpoint-based operators, the last two persist-era ones
+INTERLEAVINGS = [
+    ("dedup_minhash_lsh", "dedup_simhash"),
+    ("dedup_simhash", "dedup_minhash_lsh"),
+    ("dedup_minhash_lsh", "dedup_minhash_lsh"),
+    ("text_tfidf", "dedup_ngram_jaccard"),
+    ("dedup_ngram_jaccard", "dedup_ngram_jaccard"),
+]
 
 
-def test_drain_scoped_releases_before_register():
-    from roar_spark.caching import drain_scoped, register_scoped
-
-    released = []
-
-    class Handle:
-        def __init__(self, name):
-            self.name = name
-
-        def unpersist(self):
-            released.append(self.name)
-
-    cache: list = []
-    lock = threading.Lock()
-    register_scoped(cache, lock, [Handle("a")])
-    assert released == []
-    # entry drain releases the previous set and leaves the cache empty
-    drain_scoped(cache, lock)
-    assert released == ["a"]
-    assert cache == []
-    # the follow-up register owns the new set without double-releasing
-    register_scoped(cache, lock, [Handle("b")])
-    assert released == ["a"]
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
 
 
-def test_repeated_invocation_keeps_cache_live(spark):
-    """Second back-to-back invocation of a persist-based operator must
-    still execute against its cache: the executed plan of invocation 2
-    contains InMemoryTableScan nodes (before the r12 drain-at-entry fix
-    it contained none — the register-at-end drain had unpersisted the
-    shared entry and the whole candidate pipeline re-ran uncached)."""
+@pytest.fixture(scope="module")
+def reference(spark) -> dict[str, Counter]:
+    """Each query's row multiset, built and collected inside its own
+    scope."""
+    ref = {}
+    for name in sorted({n for pair in INTERLEAVINGS for n in pair}):
+        with caching.scope():
+            ref[name] = _rows(QUERIES[name](spark, SF))
+    return ref
+
+
+@pytest.mark.parametrize(
+    "first,second", INTERLEAVINGS, ids=[f"{a}-then-{b}" for a, b in INTERLEAVINGS]
+)
+def test_interleaved_build_then_collect(spark, reference, first, second):
+    a = QUERIES[first](spark, SF)
+    b = QUERIES[second](spark, SF)
+    assert _rows(a) == reference[first]
+    assert _rows(b) == reference[second]
+
+
+def test_two_threads_scoped(spark, reference):
+    """Each thread has its own scope: one thread leaving a scope must not
+    free the intermediates of a query the other is still running."""
+    names = ["dedup_minhash_lsh", "text_tfidf", "dedup_simhash", "dedup_ngram_jaccard"]
+
+    def run(order: list[str]) -> dict[str, Counter]:
+        out = {}
+        for name in order:
+            with caching.scope():
+                out[name] = _rows(QUERIES[name](spark, SF))
+        return out
+
+    with ThreadPoolExecutor(2) as pool:
+        futures = [pool.submit(run, order) for order in (names, names[::-1])]
+        results = [f.result(timeout=600) for f in futures]
+    for got in results:
+        assert got == {n: reference[n] for n in names}
+
+
+def test_leaving_scope_frees_blocks(spark):
+    """Blocks held by a scope are gone once it is left. Only RDDs that
+    existed before the scope may remain: the ContextCleaner can free some
+    of those meanwhile, but nothing the scope made survives it."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with caching.scope() as held:
+        QUERIES["dedup_ngram_jaccard"](spark, SF).collect()
+        assert len(held) == 2  # docsets and cand
+        inside = set(jsc.getPersistentRDDs().keys())
+        assert len(inside - before) >= 2
+    assert set(jsc.getPersistentRDDs().keys()) <= before
+
+
+def test_repeated_invocation_reads_its_own_intermediate(spark):
+    """A second back-to-back invocation executes over its own
+    materialized intermediates: every leaf of its executed plan is a
+    checkpoint scan, and no branch goes back to the parquet files."""
     from roar_spark.operators import dedup
 
-    sf = "/root/testdata/sf0.001"
-    dedup.dedup_ngram_jaccard(spark, sf).collect()
-    df2 = dedup.dedup_ngram_jaccard(spark, sf)
+    dedup.dedup_ngram_jaccard(spark, SF).collect()
+    df2 = dedup.dedup_ngram_jaccard(spark, SF)
     df2.collect()
     plan = df2._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
+    assert "Scan ExistingRDD" in plan
+    assert "FileScan" not in plan

@@ -42,6 +42,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from bench import BUDGETS_SF01, run_probes
+    from roar_spark.caching import scope
     from roar_spark.registry import QUERIES
     from roar_spark.session import get_spark, warm_python_workers
 
@@ -57,7 +58,8 @@ def main() -> None:
     for rnd in range(rounds):
         for name in order:
             t0 = time.perf_counter()
-            rows = QUERIES[name](spark, sf_dir).collect()
+            with scope():
+                rows = QUERIES[name](spark, sf_dir).collect()
             dt = time.perf_counter() - t0
             _ = len(rows)
             best[name] = min(best.get(name, dt), dt)

@@ -20,6 +20,7 @@ import duckdb
 
 sys.path.insert(0, "/root/repo")
 
+from roar_spark.caching import scope  # noqa: E402
 from roar_spark.catalog import TABLES  # noqa: E402
 from roar_spark.registry import ORACLES, QUERIES  # noqa: E402
 
@@ -134,10 +135,11 @@ def main() -> int:
         if only and name not in only:
             continue
         try:
-            sdf = fn(spark, sf_dir)
-            s_cols = [c.lower() for c in sdf.columns]
-            s_types = {c.lower(): canon_spark(t) for c, t in sdf.dtypes}
-            s_rows = [tuple(r) for r in sdf.collect()]
+            with scope():
+                sdf = fn(spark, sf_dir)
+                s_cols = [c.lower() for c in sdf.columns]
+                s_types = {c.lower(): canon_spark(t) for c, t in sdf.dtypes}
+                s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1

@@ -217,6 +217,7 @@ def main() -> None:
     sizes = [int(s) for s in args.sizes.split(",")]
     ops = args.ops.split(",") if args.ops else LINEAR_OPS + QUADRATIC_OPS
 
+    from roar_spark.caching import scope
     from roar_spark.registry import QUERIES
     from roar_spark.session import get_spark, warm_python_workers
 
@@ -254,7 +255,8 @@ def main() -> None:
             best = None
             for _ in range(args.reps):
                 t0 = time.perf_counter()
-                res = fn(spark, dirs[n]).collect()
+                with scope():
+                    res = fn(spark, dirs[n]).collect()
                 dt = time.perf_counter() - t0
                 best = dt if best is None else min(best, dt)
             row.append(f"{best:.1f}s/{len(res)}r")
