@@ -337,9 +337,6 @@ def _block_screen_pairs(
     )
     screen_min = threshold - 1e-6
 
-    # KEEP IN SYNC with _lsh_screened_pairs.screen: same normalize+matmul+
-    # threshold+orient kernel, differing only in group key and side naming
-    # (margin handling, zero-norm behavior and dtype must not drift).
     def screen(pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf[pdf["side"] == 0]
         b = pdf[pdf["side"] == 1]
@@ -502,7 +499,7 @@ def _bucket_ids(
     unit-normalized vector quantized to int8 (round(127·v/‖v‖)) — as the
     SCREEN payload for the bucket-grouped matmul pair stage. An int8
     array is ~3.3× smaller on the wire than array<float>, and the
-    replicated probe fan-out is exactly what filled the disk at 4M docs
+    replicated screen fan-out is exactly what filled the disk at 4M docs
     (r6 scale run). The quantization is screen-only, and the bound must
     cover what the screen actually compares: the RE-NORMALIZED quantized
     vectors (``_unit_rows(q)``), not q/127 itself. Per coordinate the
@@ -520,8 +517,8 @@ def _bucket_ids(
     factor is the honest correction (r6 ADVICE). Zero-norm vectors quantize to
     the zero vector, which the screen drops exactly like the exact path's
     NULL cosine. The flag is opt-in because the other consumers (ANN
-    top-k, bulk k-NN, the diagnostic candidate counter) never read qemb
-    and should not pay its compute, Arrow transfer, or cache bytes
+    top-k, bulk k-NN below the quantization cutoff) never read qemb and
+    should not pay its compute, Arrow transfer, or cache bytes
     (r6 review)."""
     import numpy as np
     import pandas as pd
@@ -564,21 +561,15 @@ def _bucket_ids(
 def _entries_from_buckets(
     with_buckets: DataFrame,
     n_planes: int,
-    probe: bool | str,
+    probe: bool,
     n_tables: int = N_TABLES,
     tables=None,
 ) -> DataFrame:
     """Explode precomputed per-table bucket ids into (vec_id, tbl, bkt)
     hash-table entries. With ``probe=True`` each row additionally fans out
     to ALL its Hamming-1 probe buckets (the asymmetric query-vs-corpus
-    shape: the query side must reach every neighbor). ``probe="higher"``
-    fans out only to Hamming-1 buckets with a HIGHER bucket id (plus the
-    identity): for a SYMMETRIC pair space — both sides of the join are
-    the corpus — an unordered Hamming-1 bucket pair (B, B′) with B < B′
-    is covered once via the B-side vector's upward flip, instead of twice
-    (each side probing the other), which halves the probe fan-out (avg
-    1 + planes/2 copies vs 1 + planes) with an identical covered pair
-    set. The explode fans out only key tuples, never embeddings.
+    shape of ann_lsh_topk: the query side must reach every neighbor).
+    The explode fans out only key tuples, never embeddings.
 
     ``tables`` restricts the emitted entries to a subset of the hash
     tables (default: all) — the staged per-table screen's lever: one
@@ -592,21 +583,6 @@ def _entries_from_buckets(
     # default knobs — measured 44% of ann_lsh_topk's plan-build (guide
     # §1 "the driver"; same idiom as the simhash signature rebuild).
     tables = range(n_tables) if tables is None else tables
-    if probe == "higher":
-        # flip bit p only when it is 0 in the bucket (XOR then increases
-        # the id); emit NULL otherwise and compact it away
-        entries = []
-        for t in tables:
-            entries.append(f"struct({t} as tbl, b{t} as bkt)")
-            entries.extend(
-                f"if((b{t} & {1 << p}) = 0,"
-                f" struct({t} as tbl, b{t} ^ {1 << p} as bkt), null)"
-                for p in range(n_planes)
-            )
-        arr = f"array_compact(array({', '.join(entries)}))"
-        return with_buckets.selectExpr(
-            "vec_id", f"explode({arr}) as e"
-        ).selectExpr("vec_id", "e.tbl as tbl", "e.bkt as bkt")
     flips = [0] + ([1 << p for p in range(n_planes)] if probe else [])
     entries = [
         f"struct({t} as tbl, b{t} ^ {flip} as bkt)" for t in tables for flip in flips
@@ -955,19 +931,17 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair recall ≥ 99.9% at candidate volumes growing O(n·log n), which is the
 # regime a production embedding-dedup (SemDeDup-style) actually runs in.
 
-DEDUP_EMB_TABLES = 8  # OR-amplification doubled vs ANN: pair recall needs
-# BOTH endpoints in one bucket, i.e. per-table success ~P^planes with no
-# query-side multiprobe boost on the corpus side
 DEDUP_EMB_ALLPAIRS_MAX_ROWS = 20_000
 
-# Probe-free banding (r10): the production screen drops Hamming-1 probing
-# entirely and compensates with MORE, slightly NARROWER tables. Fan-out
-# per vector collapses from tables·(2 + planes/2) key-tagged payload
-# copies (= 92 at 16M with the probed 8-table config — by far the most
-# expensive shuffle per row in the repo, SCALE.md r9) to exactly
-# `tables` copies: a probe-free pair space is symmetric Hamming-0, so
-# each bucket group self-screens (upper-triangle matmul) and needs no
-# plain/probe sides. Config chosen from the closed-form recall model
+# Probe-free banding (r10): the screen uses no Hamming-1 probing and
+# compensates with MORE, slightly NARROWER tables. Fan-out per vector is
+# exactly `tables` copies, where the r6–r9 probed 8-table config wrote
+# tables·(2 + planes/2) key-tagged payload copies (= 92 at 16M — by far
+# the most expensive shuffle per row in the repo, SCALE.md r9): a
+# probe-free pair space is symmetric Hamming-0, so each bucket group
+# self-screens (upper-triangle matmul) and needs no plain/probe sides.
+# The probed row below is the baseline the config was chosen against.
+# Config chosen from the closed-form recall model
 # (recall = 1-(1-P^b)^T, P = 1-θ/π; probed per-table success adds the
 # b·P^(b-1)·(1-P) Hamming-1 term) evaluated at 16M rows (b0 = 19):
 #
@@ -987,81 +961,34 @@ DEDUP_EMB_TABLES_PF = 24
 DEDUP_EMB_PF_PLANES_DELTA = 1  # planes = n_planes_for(n) - 1 (occupancy 2x)
 
 
-def _lsh_candidate_pairs(
-    emb: DataFrame, n_planes: int, dim: int, n_tables: int = DEDUP_EMB_TABLES
-) -> DataFrame:
-    """Unordered candidate (vec_id_a < vec_id_b) pairs that share a bucket
-    (exactly, or at Hamming distance 1) in ANY of the hash tables.
-
-    Buckets are computed once (single matmul — see _bucket_ids) and
-    materialized; the probe side fans each vector to its 1+planes Hamming-1
-    buckets, the plain side keeps the true bucket, and the equi-join on
-    (tbl, bkt) yields every pair within Hamming ≤ 1 of each other in some
-    table. Only (vec_id, tbl, bkt) key tuples shuffle — embeddings never
-    enter the pair stage. least/greatest normalization before distinct:
-    either endpoint may be the probing side.
-
-    DIAGNOSTIC surface: this materialization makes candidate VOLUME
-    directly countable (tests/test_dedup_embedding_lsh.py's sub-quadratic
-    pin, SCALE.md table). The production dedup path enumerates the same
-    pair space inside bucket groups with a matmul screen instead
-    (_lsh_screened_pairs) so per-pair cost is BLAS, not a fold."""
-    wb = materialize(_bucket_ids(emb, n_planes, dim, n_tables))
-    # "higher": the pair space is symmetric (corpus vs corpus), so upward-
-    # only Hamming-1 probing covers every unordered bucket pair once
-    # instead of twice — identical candidate set after the distinct
-    left = _entries_from_buckets(wb, n_planes, probe="higher", n_tables=n_tables).select(
-        F.col("vec_id").alias("id_l"), "tbl", "bkt"
-    )
-    right = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables).select(
-        F.col("vec_id").alias("id_r"), "tbl", "bkt"
-    )
-    return (
-        left.join(right, ["tbl", "bkt"])
-        .filter(F.col("id_l") != F.col("id_r"))
-        .select(
-            F.least("id_l", "id_r").alias("vec_id_a"),
-            F.greatest("id_l", "id_r").alias("vec_id_b"),
-        )
-        .distinct()
-    )
-
-
 def _lsh_screened_pairs(
     emb: DataFrame,
     n_planes: int,
     dim: int,
     threshold: float,
-    n_tables: int = DEDUP_EMB_TABLES,
+    n_tables: int = DEDUP_EMB_TABLES_PF,
     tables=None,
-    probing: bool = True,
     _wb: DataFrame | None = None,
 ) -> DataFrame:
-    """The production pair stage: bucket-grouped matmul screen over the
-    banded candidate space, emitting only pairs with screen cosine ≥
-    threshold−margin.
+    """The pair stage: bucket-grouped matmul screen over the probe-free
+    banded candidate space (see DEDUP_EMB_TABLES_PF), emitting only pairs
+    with screen cosine ≥ threshold−margin.
 
-    ``probing=False`` is the r10 probe-free form (see DEDUP_EMB_TABLES_PF):
-    the pair space is exact-collision (Hamming-0) in any table, each
-    vector contributes ONE entry per table, and each (tbl, bkt) group
-    self-screens with an upper-triangle matmul — no plain/probe sides, so
-    the replicated payload is tables·n rows instead of
-    tables·(2+planes/2)·n. ``probing=True`` keeps the r6–r9 Hamming≤1
-    space (the A/B baseline; recall model in the constants comment).
-
-    _lsh_candidate_pairs materializes every bucket collision as an id pair
-    and re-joins embeddings — fine for measuring candidate volume, but the
-    per-pair interpreted cosine fold then dominates wall-clock (measured
-    44.5 s at n=20k: ~25 M candidate folds + a 25 M-row distinct). Here the
-    pair enumeration never leaves the bucket group: entries join embeddings
-    ONCE (replication = tables·n probe-free, tables·(2+planes/2)·n probed —
-    linear either way), each (tbl, bkt) group does one numpy matmul (the
-    BLAS kernel the per-pair folds should have been), and only screen
-    survivors — actual near-dups, not candidates — reach the distinct and
-    the exact recheck. Per-group memory is bounded by bucket occupancy
-    (targeted 32, see n_planes_for); a skewed hot bucket concentrates work
-    the same way any bucketed pair stage does (simhash pigeonhole,
-    minhash banding) and is equally visible in the group size."""
+    The pair space is exact collision (Hamming-0) in any table, so each
+    vector contributes ONE entry per table and each (tbl, bkt) group
+    self-screens with an upper-triangle matmul. Materializing every
+    bucket collision as an id pair and re-joining embeddings would let
+    the per-pair interpreted cosine fold dominate wall-clock (measured
+    44.5 s at n=20k: ~25 M candidate folds + a 25 M-row distinct). Here
+    the pair enumeration never leaves the bucket group: entries join
+    embeddings ONCE (replication tables·n — linear), each (tbl, bkt) group
+    does one numpy matmul (the BLAS kernel the per-pair folds should have
+    been), and only screen survivors — actual near-dups, not candidates —
+    reach the distinct and the exact recheck. Per-group memory is bounded
+    by bucket occupancy (targeted 32, see n_planes_for); a skewed hot
+    bucket concentrates work the same way any bucketed pair stage does
+    (simhash pigeonhole, minhash banding) and is equally visible in the
+    group size."""
     import numpy as np
     import pandas as pd
 
@@ -1079,141 +1006,95 @@ def _lsh_screened_pairs(
         wb = _wb  # staged caller shares ONE materialized bucket table
     import math
 
+    # screen payload = the int8-quantized unit vector _bucket_ids already
+    # computed (~3.3× smaller than array<float> on the wire; at 4M docs the
+    # float form's ~190 GB shuffle+spill filled the local disk, r6). The
+    # margin is the PROVEN dim-dependent quantization bound on the
+    # RE-NORMALIZED quantized vectors the kernel compares (derivation in
+    # _bucket_ids): 2·ε/(1−ε/2) with ε = √dim·(0.5/127), plus float slack,
+    # can never screen out a true pair, and survivors still get the exact
+    # fold, so results stay bit-identical.
     eps = math.sqrt(dim) * (0.5 / 127.0)
     screen_min = threshold - (2.0 * eps / max(1.0 - eps / 2.0, 0.5) + 1e-6)
 
-    if not probing:
-        entries = _entries_from_buckets(
-            wb, n_planes, probe=False, n_tables=n_tables, tables=tables
-        )
-        tagged = entries.join(
-            wb.select("vec_id", F.col("qemb").alias("embedding")), "vec_id"
-        )
-        # SORTED-STREAM kernel, not applyInPandas: FlatMapGroupsInPandas
-        # calls Python once PER GROUP, and at the targeted occupancy (~64
-        # rows/bucket) the per-call overhead (Arrow slice → pandas frame →
-        # object-array stack) measured ~4.5 ms/group — 223 s of the 354 s
-        # 4M screen with the JVM 91% idle (r10 event-log attribution,
-        # SCALE.md). Hash-repartition on the group key + sort-within-
-        # partition gives the same contiguous-groups layout; mapInPandas
-        # then slices HUNDREDS of groups out of each ~10k-row Arrow batch
-        # with one stack/normalize per batch and pure numpy views per
-        # group. A group can span Arrow batch boundaries, so the tail
-        # group of every batch carries forward until its key changes.
-        # Same exchange volume and pair space as the grouped form —
-        # only the Python-call granularity changes.
-        # single int64 group key: tbl < 2^6 tables, bkt < 2^planes <= 2^24.
-        # The key gives bkt 32 bits — n_planes > 32 would silently merge
-        # buckets ACROSS tables (a merged group shares one top-k/threshold
-        # cut and can screen out candidates that survive in their own
-        # bucket). n_planes_for caps at _MAX_PLANES = 24 today; enforce
-        # the invariant where the key is built (ADVICE r11).
-        assert n_planes <= 32, f"packed (tbl,bkt) key needs n_planes <= 32, got {n_planes}"
-        key = F.col("tbl").cast("long") * F.lit(4294967296) + F.col("bkt")
-        tagged = (
-            tagged.withColumn("gk", key)
-            .repartition("gk")
-            .sortWithinPartitions("gk")
-            .select("gk", "vec_id", "embedding")
-        )
-
-        def screen_stream(batches):
-            def emit(ids, u):
-                cos = u @ u.T
-                ia, ib = np.nonzero(np.triu(cos >= screen_min, k=1))
-                if len(ia) == 0:
-                    return None
-                lo = np.minimum(ids[ia], ids[ib])
-                hi = np.maximum(ids[ia], ids[ib])
-                return pd.DataFrame({"vec_id_a": lo, "vec_id_b": hi})
-
-            carry = None  # (keys, ids, unit_rows) of the batch-tail group
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                keys = pdf["gk"].to_numpy()
-                ids = pdf["vec_id"].to_numpy()
-                u = _unit_rows(np.stack(pdf["embedding"].to_numpy()).astype("float64"))
-                if carry is not None:
-                    ck, ci, cu = carry
-                    keys = np.concatenate([ck, keys])
-                    ids = np.concatenate([ci, ids])
-                    u = np.concatenate([cu, u])
-                    carry = None
-                # contiguous groups: starts[i]..starts[i+1] share a key
-                starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
-                # the last group may continue in the next batch — carry it
-                carry = (keys[starts[-1]:], ids[starts[-1]:], u[starts[-1]:])
-                out = []
-                for i in range(len(starts) - 1):
-                    lo, hi = starts[i], starts[i + 1]
-                    if hi - lo >= 2:
-                        res = emit(ids[lo:hi], u[lo:hi])
-                        if res is not None:
-                            out.append(res)
-                if out:
-                    yield pd.concat(out, ignore_index=True)
-            if carry is not None and len(carry[1]) >= 2:
-                res = emit(carry[1], carry[2])
-                if res is not None:
-                    yield res
-
-        return (
-            tagged.mapInPandas(screen_stream, "vec_id_a long, vec_id_b long")
-            .distinct()  # pairs survive in several tables
-        )
-
-    plain = _entries_from_buckets(
+    entries = _entries_from_buckets(
         wb, n_planes, probe=False, n_tables=n_tables, tables=tables
-    ).select("vec_id", "tbl", "bkt", F.lit(0).alias("side"))
-    # "higher" probing: symmetric pair space — every Hamming-1 bucket pair
-    # screened once (the lower side's upward flip), not twice; halves the
-    # replicated payload with an identical covered pair set
-    probe = _entries_from_buckets(
-        wb, n_planes, probe="higher", n_tables=n_tables, tables=tables
-    ).select("vec_id", "tbl", "bkt", F.lit(1).alias("side"))
-    # screen payload = the int8-quantized unit vector _bucket_ids already
-    # computed (~3.3× smaller than array<float> on the wire): the probe
-    # replication is tables·(1+planes/2)·n rows of payload, and at 4M docs
-    # the float form's ~190 GB shuffle+spill filled the local disk (r6).
-    # The margin is the PROVEN dim-DEPENDENT quantization bound on the
-    # RE-NORMALIZED quantized vectors the kernel actually compares
-    # (_unit_rows below — derivation in _bucket_ids): with
-    # ε = √dim·(0.5/127), renormalization re-inflates the raw q/127 error
-    # by at most 1/(1−ε/2) (norm-ratio inequality; sphere projection does
-    # NOT contract for points inside the sphere), and cos is 1-Lipschitz
-    # per unit argument, so 2·ε/(1−ε/2) (+ float slack) can never screen
-    # out a true pair — a hardcoded 0.07 was only valid up to dim ≈ 78
-    # (r6 review), and the bare 2·ε of r6 omitted the renormalization
-    # factor (r6 ADVICE). Survivors still get the exact fold, so results
-    # stay bit-identical.
-    tagged = plain.unionAll(probe).join(
+    )
+    tagged = entries.join(
         wb.select("vec_id", F.col("qemb").alias("embedding")), "vec_id"
     )
+    # SORTED-STREAM kernel, not applyInPandas: FlatMapGroupsInPandas
+    # calls Python once PER GROUP, and at the targeted occupancy (~64
+    # rows/bucket) the per-call overhead (Arrow slice → pandas frame →
+    # object-array stack) measured ~4.5 ms/group — 223 s of the 354 s
+    # 4M screen with the JVM 91% idle (r10 event-log attribution,
+    # SCALE.md). Hash-repartition on the group key + sort-within-
+    # partition gives the same contiguous-groups layout; mapInPandas
+    # then slices HUNDREDS of groups out of each ~10k-row Arrow batch
+    # with one stack/normalize per batch and pure numpy views per
+    # group. A group can span Arrow batch boundaries, so the tail
+    # group of every batch carries forward until its key changes.
+    # Same exchange volume and pair space as the grouped form —
+    # only the Python-call granularity changes.
+    # single int64 group key: tbl < 2^6 tables, bkt < 2^planes <= 2^24.
+    # The key gives bkt 32 bits — n_planes > 32 would silently merge
+    # buckets ACROSS tables (a merged group shares one top-k/threshold
+    # cut and can screen out candidates that survive in their own
+    # bucket). n_planes_for caps at _MAX_PLANES = 24 today; enforce
+    # the invariant where the key is built (ADVICE r11).
+    assert n_planes <= 32, f"packed (tbl,bkt) key needs n_planes <= 32, got {n_planes}"
+    key = F.col("tbl").cast("long") * F.lit(4294967296) + F.col("bkt")
+    tagged = (
+        tagged.withColumn("gk", key)
+        .repartition("gk")
+        .sortWithinPartitions("gk")
+        .select("gk", "vec_id", "embedding")
+    )
 
-    # KEEP IN SYNC with _block_screen_pairs.screen (see note there).
-    def screen(pdf: pd.DataFrame) -> pd.DataFrame:
-        p = pdf[pdf["side"] == 0]
-        q = pdf[pdf["side"] == 1]
-        if p.empty or q.empty:
-            return pd.DataFrame({"vec_id_a": [], "vec_id_b": []}).astype("int64")
-        mp = np.stack(p["embedding"].to_numpy()).astype("float64")
-        mq = np.stack(q["embedding"].to_numpy()).astype("float64")
-        cos = _unit_rows(mp) @ _unit_rows(mq).T
-        # zero-norm rows: NaN >= screen_min is False — dropped, matching
-        # the exact recheck's NULL-cosine rejection
-        ip, iq = np.nonzero(cos >= screen_min)
-        ids_p = p["vec_id"].to_numpy()[ip]
-        ids_q = q["vec_id"].to_numpy()[iq]
-        lo = np.minimum(ids_p, ids_q)
-        hi = np.maximum(ids_p, ids_q)
-        keep = lo < hi  # drops self-pairs and orients the rest
-        return pd.DataFrame({"vec_id_a": lo[keep], "vec_id_b": hi[keep]}).drop_duplicates()
+    def screen_stream(batches):
+        def emit(ids, u):
+            cos = u @ u.T
+            ia, ib = np.nonzero(np.triu(cos >= screen_min, k=1))
+            if len(ia) == 0:
+                return None
+            lo = np.minimum(ids[ia], ids[ib])
+            hi = np.maximum(ids[ia], ids[ib])
+            return pd.DataFrame({"vec_id_a": lo, "vec_id_b": hi})
+
+        carry = None  # (keys, ids, unit_rows) of the batch-tail group
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            keys = pdf["gk"].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
+            u = _unit_rows(np.stack(pdf["embedding"].to_numpy()).astype("float64"))
+            if carry is not None:
+                ck, ci, cu = carry
+                keys = np.concatenate([ck, keys])
+                ids = np.concatenate([ci, ids])
+                u = np.concatenate([cu, u])
+                carry = None
+            # contiguous groups: starts[i]..starts[i+1] share a key
+            starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+            # the last group may continue in the next batch — carry it
+            carry = (keys[starts[-1]:], ids[starts[-1]:], u[starts[-1]:])
+            out = []
+            for i in range(len(starts) - 1):
+                lo, hi = starts[i], starts[i + 1]
+                if hi - lo >= 2:
+                    res = emit(ids[lo:hi], u[lo:hi])
+                    if res is not None:
+                        out.append(res)
+            if out:
+                yield pd.concat(out, ignore_index=True)
+        if carry is not None and len(carry[1]) >= 2:
+            res = emit(carry[1], carry[2])
+            if res is not None:
+                yield res
 
     return (
-        tagged.groupBy("tbl", "bkt")
-        .applyInPandas(screen, "vec_id_a long, vec_id_b long")
-        .distinct()  # pairs survive in several tables/buckets
+        tagged.mapInPandas(screen_stream, "vec_id_a long, vec_id_b long")
+        .distinct()  # pairs survive in several tables
     )
 
 
@@ -1241,16 +1122,14 @@ def _lsh_screened_pairs_staged(
     n_planes: int,
     dim: int,
     threshold: float,
-    n_tables: int = DEDUP_EMB_TABLES,
-    probing: bool = True,
+    n_tables: int = DEDUP_EMB_TABLES_PF,
 ) -> DataFrame:
     """The screen executed ONE HASH TABLE AT A TIME: identical pair space
     and survivors as _lsh_screened_pairs (equivalence pinned), but the
-    live shuffle is one table's fan-out — n entries probe-free,
-    n·(2 + planes/2) probed — instead of all tables' at once. This is the
-    disk lever the r8 verdict demanded: the probed single-job screen at
-    16M rows wrote ≈ 92 entry copies/vector and died on that box's disk
-    (SCALE.md r8); staging divides the PEAK by n_tables and releases each
+    live shuffle is one table's fan-out — n entries — instead of all
+    tables' at once. This is the disk lever the r8 verdict demanded: the
+    r6–r9 probed single-job screen at 16M rows wrote ≈ 92 entry
+    copies/vector and died on that box's disk (SCALE.md r8); staging divides the PEAK by n_tables and releases each
     stage's files before the next starts (_release_stage_shuffles). Since
     r10's probe-free banding cut the fan-out to 24 copies/vector, the
     single-job form fits 16M and staging engages only above
@@ -1277,7 +1156,6 @@ def _lsh_screened_pairs_staged(
             threshold,
             n_tables=n_tables,
             tables=[t],
-            probing=probing,
             _wb=wb,
         )
         # eager: runs THIS table's job now; truncates lineage so the
@@ -1308,7 +1186,6 @@ def dedup_embedding_lsh(
     threshold: float = COSINE_THRESHOLD,
     force_lsh: bool | None = None,
     force_staged: bool | None = None,
-    force_probing: bool | None = None,
     force_corpus_rows: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup dedup with an LSH candidate stage: keep-first
@@ -1330,9 +1207,7 @@ def dedup_embedding_lsh(
     shared exact ordered fold, so every emitted decision is exact — only
     the candidate set is approximate. Shuffle: tables·n bucket-keyed
     payload entries + survivor id pairs — sub-quadratic growth pinned by
-    the same test and the scale_smoke table. ``force_probing=True``
-    selects the r6–r9 Hamming≤1 probed space (8 wider tables,
-    tables·(2+planes/2)·n entries — the measured A/B baseline).
+    the same test and the scale_smoke table.
 
     Above DEDUP_EMB_STAGED_MAX_ENTRIES replicated entries the screen runs
     STAGED per hash table (_lsh_screened_pairs_staged): identical pair
@@ -1343,30 +1218,18 @@ def dedup_embedding_lsh(
 
     n = table_row_count("embeddings", sf_dir)
     use_lsh = force_lsh if force_lsh is not None else n > DEDUP_EMB_ALLPAIRS_MAX_ROWS
-    probing = force_probing if force_probing is not None else False
     # force_corpus_rows derives the BANDING config (plane count) as if the
     # corpus had that many rows — the recall-pin tests run the 16M-scale
     # config on a small planted corpus (pair recall depends only on the
     # pair's own codes, never on corpus size). Cost levers (staging,
     # shuffle-width tuning) still follow the REAL row count.
     n_cfg = force_corpus_rows if force_corpus_rows is not None else n
-    if probing:
-        n_tables = DEDUP_EMB_TABLES
-        n_planes = n_planes_for(n_cfg)
-        # float, not //: the 400M entry budget was calibrated from the
-        # documented ~92 copies/vector = 8·(2 + 19/2); truncating to
-        # 8·(2 + 19//2) = 88 under-counted ~4-5% near the staging
-        # boundary (r10 ADVICE)
-        per_table = 2 + n_planes / 2
-    else:
-        n_tables = DEDUP_EMB_TABLES_PF
-        n_planes = max(_MIN_PLANES, n_planes_for(n_cfg) - DEDUP_EMB_PF_PLANES_DELTA)
-        per_table = 1.0
-    fanout = n_tables * per_table
+    n_tables = DEDUP_EMB_TABLES_PF
+    n_planes = max(_MIN_PLANES, n_planes_for(n_cfg) - DEDUP_EMB_PF_PLANES_DELTA)
     staged = (
         force_staged
         if force_staged is not None
-        else n * fanout > DEDUP_EMB_STAGED_MAX_ENTRIES
+        else n * n_tables > DEDUP_EMB_STAGED_MAX_ENTRIES
     )
     # spread on the LSH path: the first stage is the dense hash matmul
     # (heavy per-row work, no early shuffle) — exactly the documented
@@ -1377,7 +1240,7 @@ def dedup_embedding_lsh(
         # with this plan via the (possibly cloned) session
         from roar_spark.session import tuned_session
 
-        spark = tuned_session(spark, int(n * (per_table if staged else fanout)))
+        spark = tuned_session(spark, n if staged else n * n_tables)
     emb = _with_norm(load_table(spark, "embeddings", sf_dir, spread=use_lsh))
     if use_lsh:
         screen = _lsh_screened_pairs_staged if staged else _lsh_screened_pairs
@@ -1387,7 +1250,6 @@ def dedup_embedding_lsh(
             embedding_dim(sf_dir),
             threshold,
             n_tables=n_tables,
-            probing=probing,
         )
         pairs = _exact_pair_recheck(emb, cand, threshold)
     else:
@@ -1573,7 +1435,6 @@ def _knn_screened_candidates(
     n_planes: int,
     dim: int,
     k: int,
-    probe: bool,
     n_tables: int = N_TABLES,
     quantize: bool = False,
 ) -> DataFrame:
@@ -1615,31 +1476,22 @@ def _knn_screened_candidates(
     import pandas as pd
 
     # The bucket table is materialized ONLY when the plan consumes it
-    # more than once (probe=True: corpus + probed entry branches;
-    # quantize=True: entries + the qemb payload join) — the
-    # concurrent-scan cache race _lsh_screened_pairs documents. On the
-    # default bulk path (probe=False, quantize=False) wb has exactly ONE
-    # consumer — the entry explode — so the r11 persist+count was a pure
-    # extra job plus cache build, and skipping it lets the hash matmul
-    # pipeline straight into the explode and the group-key exchange's map
-    # side (one stage, no cache bytes). Measured r12: exec −0.3–0.5 s at
+    # more than once (quantize=True: entries + the qemb payload join) —
+    # the concurrent-scan cache race _lsh_screened_pairs documents. On
+    # the default bulk path (quantize=False) wb has exactly ONE consumer —
+    # the entry explode — so the r11 persist+count was a pure extra job
+    # plus cache build, and skipping it lets the hash matmul pipeline
+    # straight into the explode and the group-key exchange's map side
+    # (one stage, no cache bytes). Measured r12: exec −0.3–0.5 s at
     # sf0.1; at scale it removes an n-row cache nobody rereads.
     wb = _bucket_ids(emb, n_planes, dim, n_tables, emit_qemb="int16" if quantize else False)
-    if probe or quantize:
+    if quantize:
         wb = materialize(wb)
-    base = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables)
-    if probe:
-        tagged = base.select("vec_id", "tbl", "bkt", F.lit(0).alias("side")).unionAll(
-            _entries_from_buckets(wb, n_planes, probe=True, n_tables=n_tables).select(
-                "vec_id", "tbl", "bkt", F.lit(1).alias("side")
-            )
-        )
-    else:
-        # probe off (the default): corpus and query entry sets are byte-
-        # identical, so ONE explosion (every row is both sides) halves the
-        # volume of the dim-wide embedding column through the (tbl, bkt)
-        # shuffle vs. unioning two copies
-        tagged = base.select("vec_id", "tbl", "bkt")
+    # the pair space is symmetric (corpus vs corpus, Hamming-0): ONE
+    # explosion serves as both sides (every row is query and corpus),
+    # half the dim-wide embedding volume a two-sided union would push
+    # through the (tbl, bkt) shuffle
+    tagged = _entries_from_buckets(wb, n_planes, probe=False, n_tables=n_tables)
     if quantize:
         # int16 screen payload (scale cancels under renormalization): the
         # entry shrinks from ~620 B (array<float> + row overhead, measured
@@ -1699,38 +1551,10 @@ def _knn_screened_candidates(
             out_c.append(cos[iq, ip])
         return out_q, out_p, out_c
 
-    if probe:
-        # KEEP IN SYNC with _lsh_screened_pairs.screen (normalization +
-        # stack). The asymmetric probed space keeps the grouped kernel
-        # (non-default; ann-style small query sets).
-        def screen_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-            p = pdf[pdf["side"] != 1]  # corpus rows (side 0 or 2)
-            q = pdf[pdf["side"] != 0]  # query rows (side 1 or 2)
-            if p.empty or q.empty:
-                empty = pd.DataFrame({"query_id": [], "vec_id": []}).astype("int64")
-                empty["cos"] = pd.Series([], dtype="float64")
-                return empty
-            mp = _unit_rows(np.stack(p["embedding"].to_numpy()).astype("float64"))
-            mq = _unit_rows(np.stack(q["embedding"].to_numpy()).astype("float64"))
-            out_q, out_p, out_c = topk_keep(
-                q["vec_id"].to_numpy(), p["vec_id"].to_numpy(), mq, mp
-            )
-            return pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "vec_id": np.concatenate(out_p),
-                    "cos": np.concatenate(out_c),
-                }
-            )
-
-        return tagged.groupBy("tbl", "bkt").applyInPandas(
-            screen_topk, "query_id long, vec_id long, cos double"
-        )
-
-    # Probe-free (the default): SORTED-STREAM kernel, not applyInPandas —
-    # the same r10 rework _lsh_screened_pairs carries, applied to the
-    # bulk-kNN screen (r11). FlatMapGroupsInPandas calls Python once PER
-    # (tbl, bkt) GROUP (~4.5 ms/group measured in the r10 event-log
+    # SORTED-STREAM kernel, not applyInPandas — the same r10 rework
+    # _lsh_screened_pairs carries, applied to the bulk-kNN screen (r11).
+    # FlatMapGroupsInPandas calls Python once PER (tbl, bkt) GROUP
+    # (~4.5 ms/group measured in the r10 event-log
     # attribution); at sf0.1 that is ~256 groups ≈ 1.2 s of pure call
     # overhead for a 2k-row corpus, and at any scale it taxes the
     # targeted ~32-row occupancy. Hash-repartition on a single packed
@@ -1831,7 +1655,6 @@ def embedding_knn_classify_bulk(
     spark: SparkSession,
     sf_dir: str,
     k: int = KNN_K,
-    probe: bool = False,
     force_screen_rerank: bool | None = None,
     quantize_screen: bool | None = None,
 ) -> DataFrame:
@@ -1854,16 +1677,13 @@ def embedding_knn_classify_bulk(
     n_planes_for), and only ≈ k·tables survivors per vector reach the
     rerank, so total work is O(n · tables · 32) matmul FLOPs +
     O(n · k · tables) rerank rows ≈ linear in corpus size where brute
-    classification is O(n²). Approximate only in the candidate set;
+    classification is O(n²). Buckets match exactly, with no Hamming-1
+    multi-probe: at bulk scale probing turned ~128 candidates/vector into
+    ~1500 (the 80k smoke ran 10× longer), and with every vector already
+    OR-matched across N_TABLES independent tables, table diversity
+    supplies the recall. Approximate only in the candidate set;
     scores above it are 6-decimal roundings of a float64 cosine on both
     paths (see the rerank-gap caveat under ``force_screen_rerank``).
-
-    ``probe`` (default False): Hamming-1 multi-probe multiplies the
-    probe-side fan-out by (1+planes) — the right recall/cost trade for a
-    SMALL query set (ann_lsh_topk uses it), but at bulk scale it turns
-    ~128 candidates/vector into ~1500 (measured: the 80k smoke ran 10×
-    longer); with every vector already OR-matched across N_TABLES
-    independent tables, table diversity supplies the recall instead.
 
     ``quantize_screen`` (None = dispatch on _SCREEN_QUANT_CUTOFF) ships
     the int16-quantized payload through the screen shuffle above 1M rows
@@ -1920,7 +1740,7 @@ def embedding_knn_classify_bulk(
     heaviest = n * N_TABLES * screen_row_units if screen_rerank else n * k * N_TABLES * 8
     spark = tuned_session(spark, heaviest)
     emb = _with_norm(load_table(spark, "embeddings", sf_dir, spread=SPREAD_MIN_EMB_ROWS))
-    screened = _knn_screened_candidates(emb, n_planes, dim, k, probe, quantize=quantize)
+    screened = _knn_screened_candidates(emb, n_planes, dim, k, quantize=quantize)
     w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
     if screen_rerank:
         # dedup across tables keeps the LARGEST matmul cos (same pair,

@@ -7,7 +7,9 @@ the smj/bnlj columns read 0 unconditionally. Every counter now reads the
 numbered detail headers ("(53) SortMergeJoin"), which are one per node
 and type-free. These tests lock the counting against a real committed
 plan file (so the fixture cannot drift from what explain actually emits)
-plus synthetic corner cases.
+plus synthetic corner cases. The flag rule is pinned too: a query at its
+vetted SortMergeJoin / BroadcastNestedLoopJoin count passes, one more is
+flagged.
 """
 
 import os
@@ -15,7 +17,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from audit_plans import plan_counts  # noqa: E402
+from audit_plans import VETTED_JOINS, flag_reasons, plan_counts  # noqa: E402
 
 _REPO = os.path.join(os.path.dirname(__file__), "..")
 
@@ -80,3 +82,20 @@ def test_codegen_tagged_header_counted():
     c = plan_counts(p)
     assert c["wind"] == 1
     assert c["exch"] == 1
+
+
+def test_vetted_join_count_not_flagged():
+    for q, vetted in VETTED_JOINS.items():
+        row = {"q": q, "smj": 0, "bnlj": 0, "rowudf": 0, "cart": 0, **vetted}
+        assert flag_reasons(row) == [], q
+    assert flag_reasons({"q": "q1_pricing_summary", "smj": 0, "bnlj": 0}) == []
+
+
+def test_join_above_vetted_count_flagged():
+    for q, vetted in VETTED_JOINS.items():
+        for k in ("smj", "bnlj"):
+            row = {"q": q, "smj": 0, "bnlj": 0, **vetted}
+            row[k] += 1
+            assert len(flag_reasons(row)) == 1, (q, k)
+    # a query with no vetted entry is vetted at zero
+    assert flag_reasons({"q": "q1_pricing_summary", "smj": 1, "bnlj": 0})

@@ -2,12 +2,16 @@
 against $SPARK_GRAFT_SF_DIR (default sf0.01 — plan shape, not timing) and
 count the structural red-flag nodes in `explain("formatted")`:
 BatchEvalPython/ArrowEvalPython (row-at-a-time Python), CartesianProduct,
-SortMergeJoin, Exchange counts. Each query is built inside a
-``caching.scope()``, and the source plan of every intermediate it
-materialized is counted too: a checkpointed subtree prints as a bare
-``Scan ExistingRDD`` leaf in the query's own plan. Prints one JSON line
-per run; the r11 optimization round's whole-surface sweep evidence
-(OPTIMIZATION_r11.md).
+SortMergeJoin, BroadcastNestedLoopJoin, Exchange counts. Each query is
+built inside a ``caching.scope()``, and the source plan of every
+intermediate it materialized is counted too: a checkpointed subtree
+prints as a bare ``Scan ExistingRDD`` leaf in the query's own plan.
+Prints one JSON line per run; the r11 optimization round's whole-surface
+sweep evidence (OPTIMIZATION_r11.md).
+
+A query is flagged (exit 1) when it has a row-UDF, a cartesian product,
+an error, or more SortMergeJoins / BroadcastNestedLoopJoins than its
+entry in VETTED_JOINS.
 
 Usage: python tools/audit_plans.py [query ...]
 """
@@ -54,6 +58,44 @@ def plan_counts(p: str) -> dict:
     }
 
 
+# SortMergeJoin / BroadcastNestedLoopJoin counts per query, recorded from
+# one audit at sf0.01 and vetted as the correct strategies in
+# OPTIMIZATION_r12.md: the SMJs are full-outer or corpus-sized LeftOuter
+# final joins and range-join equi-prefixes, the BNLJs non-equi joins with a
+# bounded broadcast side. A query missing here is vetted at 0 of each.
+VETTED_JOINS = {
+    "join_full_outer": {"smj": 1},
+    "dedup_clusters_star": {"smj": 1},
+    "dedup_embedding": {"smj": 1},
+    "dedup_embedding_lsh": {"smj": 1},
+    "embedding_knn_classify_bulk": {"smj": 1},
+    "events_range_join": {"smj": 1},
+    "q21_waiting_supplier": {"smj": 1},
+    "q20_excess_suppliers": {"smj": 1},
+    "join_non_equi": {"bnlj": 1},
+    "dedup_simhash": {"bnlj": 1},
+    "sim_brute_topk": {"bnlj": 1},
+    "embedding_knn_classify": {"bnlj": 1},
+    "sample_temperature": {"bnlj": 1},
+    "q22_idle_customers": {"bnlj": 1},
+    "q11_important_parts": {"bnlj": 1},
+}
+
+
+def flag_reasons(row: dict) -> list[str]:
+    """Why one audit row is flagged; empty when it is clean."""
+    if "err" in row:
+        return ["error"]
+    reasons = [k for k in ("rowudf", "cart") if row.get(k)]
+    vetted = VETTED_JOINS.get(row["q"], {})
+    reasons += [
+        f"{k} {row[k]} > vetted {vetted.get(k, 0)}"
+        for k in ("smj", "bnlj")
+        if row.get(k, 0) > vetted.get(k, 0)
+    ]
+    return reasons
+
+
 def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -84,16 +126,14 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — audit must cover every row
             rows.append({"q": name, "err": str(e)[:120]})
     print(json.dumps(rows))
-    flags = [
-        r for r in rows if r.get("rowudf") or r.get("cart") or "err" in r
-    ]
+    flags = [(r, why) for r in rows if (why := flag_reasons(r))]
     print(
         f"# {len(rows)} queries audited; {len(flags)} flagged "
-        f"(row-UDF / cartesian / error)",
+        f"(row-UDF / cartesian / unvetted SMJ or BNLJ / error)",
         file=sys.stderr,
     )
-    for r in flags:
-        print(f"# FLAG {r}", file=sys.stderr)
+    for r, why in flags:
+        print(f"# FLAG {'; '.join(why)}: {r}", file=sys.stderr)
     sys.exit(1 if flags else 0)
 
 
